@@ -17,8 +17,11 @@ Design:
     ``b`` — both are ``pmod(xxhash64(id), n_buckets)`` (``build_hnsw``'s
     shard hash IS ``_bucket_expr`` for a single key). The rows needed to
     rebuild a shard are therefore exactly the rewritten bucket's rows,
-    which the merge has already computed — zero extra table reads — and
-    at cluster scale the shard is co-located with its bucket.
+    which the commit has just staged: a merge or OPTIMIZE builds every
+    index's shards in ONE Spark job with one task per rewritten bucket,
+    each task reading its bucket's staged files and running the
+    Spark-free builders of ``indexed_np`` — the shards are built from the
+    exact bytes being published, with zero extra table reads.
   * **One staged directory, one publish.** The merge's rebuilt shard
     graphs are written into the SAME ``_staged_<uuid>`` directory as its
     bucket data (under ``__hnsw/shard=<b>``), and the manifest's
@@ -89,12 +92,21 @@ _INTEGRAL = {"byte", "short", "integer", "long"}
 
 # index kind → LEGACY artifact directory (pre-multi-index manifests whose
 # single anonymous spec reads as name "__legacy__"); partition columns of
-# the staged shard write (shard first: shard b ≡ bucket b)
+# the staged shard write (shard first: shard b ≡ bucket b); shard file
+# schema, partition columns last (``{key}`` = the table key's type) —
+# serves read under it instead of paying a footer-inference job per
+# owning version
 _IDX_DIRS = {"hnsw": "__hnsw", "ivfsq": "__ivfsq"}
 _IDX_PARTS = {
     "hnsw": ["shard"],
     "ivfsq": ["shard", "_cell"],
     "ivfpq": ["shard", "_cell"],
+}
+_IDX_SCHEMA = {
+    "hnsw": "id bigint, embedding array<double>, max_level int, "
+    "neighbors array<array<bigint>>, shard int",
+    "ivfsq": "vec_id {key}, codes array<tinyint>, shard int, _cell int",
+    "ivfpq": "vec_id {key}, sub int, code int, shard int, _cell int",
 }
 
 _NAME_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
@@ -108,6 +120,16 @@ def _idx_dir(name: str, params: dict) -> str:
     if name == "__legacy__":
         return _IDX_DIRS[params.get("kind", "hnsw")]
     return f"__idx_{name}"
+
+
+def _written_shards(dest: str, name: str, params: dict) -> "set[int]":
+    """The shards a commit's version directory holds for one index."""
+    hdir = os.path.join(dest, _idx_dir(name, params))
+    return {
+        int(d.split("=", 1)[1])
+        for d in (os.listdir(hdir) if os.path.isdir(hdir) else [])
+        if d.startswith("shard=")
+    }
 
 
 def _check_attachable(
@@ -199,12 +221,7 @@ def _publish_index(
     def build(final: int, base_man: dict, dest: str) -> dict:
         manifest = {k: v for k, v in base_man.items() if k != "version"}
         manifest["version"] = final
-        hdir = os.path.join(dest, _idx_dir(name, params))
-        written = {
-            int(d.split("=", 1)[1])
-            for d in (os.listdir(hdir) if os.path.isdir(hdir) else [])
-            if d.startswith("shard=")
-        }
+        written = _written_shards(dest, name, params)
         indexes = {n: dict(s) for n, s in VER._indexes(base_man).items()}
         indexes[name] = {
             "params": params,
@@ -268,30 +285,22 @@ def attach_hnsw_index(
     return _publish_index(table, man, name, params, idx)
 
 
-def _ivfsq_index_df(man: dict, rows: DataFrame, params: dict) -> DataFrame:
-    """The IVF-SQ8 shard artifact for a set of table rows: (vec_id, int8
-    codes, _cell, shard) — cell assignment and encoding are pure
-    functions of (embedding, frozen manifest artifacts), and shard IS the
-    row's bucket (``_bucket_expr`` on the key's manifest dtype), so a
-    merge's rewritten-bucket rows rebuild exactly their own shards."""
-    from semantic_index_spark.operators.similarity import ivf_assign, sq_codes_column
+def _ivf_cells(man: dict, rows: DataFrame, params: dict) -> DataFrame:
+    """(vec_id, embedding, shard, _cell) rows for an IVF kind's attach:
+    shard IS the row's bucket (``_bucket_expr`` on the key's manifest
+    dtype) and the cell is a pure function of (embedding, frozen
+    centroids), so each kind adds its codes in the same narrow
+    projection (r13; the former encode ⋈ assigned join re-shuffled the
+    rows by id to reunite them, guide §2.4)."""
+    from semantic_index_spark.operators.similarity import ivf_assign
 
-    p = params
     key = man["key_cols"][0]
     src = rows.select(
         F.col(key).alias("vec_id"),
-        F.col(p["emb_col"]).alias("embedding"),
+        F.col(params["emb_col"]).alias("embedding"),
         VER._bucket_expr([key], int(man["n_buckets"])).alias("shard"),
     )
-    # cell, codes and shard are all pure functions of the row — ONE narrow
-    # projection (r13; the former sq_encode ⋈ assigned join re-shuffled the
-    # rows by id to reunite them, guide §2.4)
-    return ivf_assign(src, p["centroids"]).select(
-        "vec_id",
-        sq_codes_column(p["model"]).alias("codes"),
-        "_cell",
-        "shard",
-    )
+    return ivf_assign(src, params["centroids"])
 
 
 def attach_ivfsq_index(
@@ -312,7 +321,11 @@ def attach_ivfsq_index(
     rest of the index was encoded under, and a time-travel serve at
     version n decodes with version n's own params. Same crash/OCC
     contract as ``attach_hnsw_index``."""
-    from semantic_index_spark.operators.similarity import make_centroids, sq_train
+    from semantic_index_spark.operators.similarity import (
+        make_centroids,
+        sq_codes_column,
+        sq_train,
+    )
 
     man = VER._read_manifest(table)
     key = _check_attachable(man, table, emb_col, name, allow_string=True)
@@ -331,34 +344,10 @@ def attach_ivfsq_index(
         "model": model,
         "seed": int(seed),
     }
-    idx = _ivfsq_index_df(man, rows, params)
+    idx = _ivf_cells(man, rows, params).select(
+        "vec_id", sq_codes_column(model).alias("codes"), "_cell", "shard"
+    )
     return _publish_index(table, man, name, params, idx)
-
-
-def _ivfpq_index_df(man: dict, rows: DataFrame, params: dict) -> DataFrame:
-    """The IVF-PQ shard artifact for a set of table rows: long-form
-    (vec_id, sub, code, _cell, shard) PQ code rows — cell assignment and
-    encoding are pure functions of (embedding, frozen manifest
-    artifacts), so a merge's rewritten-bucket rows rebuild exactly their
-    own shards, identically to the other kinds."""
-    from semantic_index_spark.operators.similarity import ivf_assign, pq_codes_array
-
-    p = params
-    key = man["key_cols"][0]
-    src = rows.select(
-        F.col(key).alias("vec_id"),
-        F.col(p["emb_col"]).alias("embedding"),
-        VER._bucket_expr([key], int(man["n_buckets"])).alias("shard"),
-    )
-    # cell, codes and shard are all pure functions of the row — ONE narrow
-    # projection + posexplode to the long form (r13; the former
-    # pq_encode ⋈ assigned join re-shuffled the rows by id, guide §2.4)
-    return ivf_assign(src, p["centroids"]).select(
-        "vec_id",
-        F.posexplode(pq_codes_array(p["codebooks"])).alias("sub", "code"),
-        "_cell",
-        "shard",
-    )
 
 
 def attach_ivfpq_index(
@@ -388,6 +377,7 @@ def attach_ivfpq_index(
     crash/OCC contract as the other kinds."""
     from semantic_index_spark.operators.similarity import (
         make_centroids,
+        pq_codes_array,
         pq_train_encode,
     )
 
@@ -416,7 +406,12 @@ def attach_ivfpq_index(
         "codebooks": codebooks,
         "seed": int(seed),
     }
-    idx = _ivfpq_index_df(man, tbl, params)
+    idx = _ivf_cells(man, tbl, params).select(
+        "vec_id",
+        F.posexplode(pq_codes_array(codebooks)).alias("sub", "code"),
+        "_cell",
+        "shard",
+    )
     return _publish_index(table, man, name, params, idx)
 
 
@@ -528,78 +523,46 @@ def detach_index(table: str, name: "str | None" = None) -> int:
 detach_hnsw_index = detach_index
 
 
-def _stage_merge_index(spark, man: dict, result: DataFrame, affected):
-    """The merge-side maintenance hook (called by ``merge_into_bucketed``
-    when the manifest carries an index): build the affected buckets'
-    replacement shard graphs from the merge's OWN rewritten-bucket rows
-    and return (stage, finalize) callbacks for ``_commit_bucketed`` —
-    stage writes the graphs into the merge's staged directory, finalize
-    advances ``index.shards`` for the affected buckets in the same
-    manifest (inheriting every other shard's owner from the manifest the
-    commit lands on, so a disjoint-bucket rebase keeps both writers'
-    shards exactly like it keeps both writers' buckets). Round 12:
-    EVERY index the manifest carries rebuilds in the same commit — one
-    shard-build per (index, affected bucket), dispatched on each spec's
-    ``params.kind`` (hnsw rebuilds shard graphs, ivfsq re-encodes against
-    that index's frozen quantizer/centroids)."""
-    key = man["key_cols"][0]
-    built: dict[str, DataFrame] = {}
-    for iname, spec in VER._indexes(man).items():
-        p = spec["params"]
-        kind = p.get("kind", "hnsw")
-        if kind == "hnsw":
-            from semantic_index_spark.operators.hnsw import build_hnsw
+def _stage_merge_index(man: dict, affected, spark: "SparkSession | None" = None):
+    """The index-maintenance hook of every commit that rewrites buckets
+    of an indexed table (``merge_into_bucketed``, ``optimize_bucketed``,
+    the SQL door's ``INSERT``): returns (stage, finalize) callbacks for
+    ``_commit_staged_bucketed``. ``stage(staged)`` runs AFTER the data
+    write: it builds EVERY index's shard for each rewritten bucket from
+    that bucket's staged files (``indexed_np.stage_bucket_shards`` —
+    the shards describe the exact bytes being published) into the same
+    staged directory. With ``spark`` that is ONE job with one task per
+    rewritten bucket, submitted from the caller's thread (so it stays in
+    the caller's job group); without (the SQL door's commit worker has
+    no SparkSession) a loop in the calling process. A failing task fails
+    the commit before it publishes. ``finalize`` advances each index's
+    shard map for the affected buckets in the same manifest (inheriting
+    every other shard's owner from the manifest the commit lands on, so
+    a disjoint-bucket rebase keeps both writers' shards exactly like it
+    keeps both writers' buckets)."""
+    from functools import partial
 
-            built[iname] = build_hnsw(
-                result.select(
-                    F.col(key).alias("vec_id"),
-                    F.col(p["emb_col"]).alias("embedding"),
-                ),
-                n_shards=int(man["n_buckets"]),
-                m=p["m"],
-                ef_construction=p["ef_construction"],
-                seed=p["seed"],
-            )
-        elif kind == "ivfpq":
-            built[iname] = _ivfpq_index_df(man, result, p)
-        else:
-            built[iname] = _ivfsq_index_df(man, result, p)
+    from semantic_index_spark.sources.indexed_np import stage_bucket_shards
 
     def stage(staged: str) -> None:
-        # the per-index shard writes are independent jobs over the SAME
-        # checkpointed merge result into DISJOINT staged subdirectories —
-        # submit them concurrently (Spark contexts accept multi-threaded
-        # job submission) so a 3-index table pays max(write) not Σ(write)
-        # per merge; any failure propagates before the commit publishes
-        # (r13, guide §1.2). Sequential fallback for a single index.
-        def _write(item):
-            iname, idx = item
-            p = VER._indexes(man)[iname]["params"]
-            idx.write.mode("errorifexists").partitionBy(
-                *_IDX_PARTS[p.get("kind", "hnsw")]
-            ).parquet(os.path.join(staged, _idx_dir(iname, p)))
-
-        items = list(built.items())
-        if len(items) == 1:
-            _write(items[0])
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=len(items)) as pool:
-                for _ in pool.map(_write, items):
-                    pass
+        buckets = [
+            b for b in affected
+            if os.path.isdir(os.path.join(staged, f"__bucket={b}"))
+        ]
+        if spark is None:
+            for b in buckets:
+                stage_bucket_shards(staged, man, b)
+        elif buckets:
+            spark.sparkContext.parallelize(buckets, len(buckets)).foreach(
+                partial(stage_bucket_shards, staged, man)
+            )
 
     def finalize(manifest: dict, final: int, base_man, dest: str) -> dict:
         base_idxs = VER._indexes(base_man) or VER._indexes(man)
         indexes = {}
         for iname, spec in VER._indexes(man).items():
             p = spec["params"]
-            hdir = os.path.join(dest, _idx_dir(iname, p))
-            written = {
-                int(d.split("=", 1)[1])
-                for d in (os.listdir(hdir) if os.path.isdir(hdir) else [])
-                if d.startswith("shard=")
-            }
+            written = _written_shards(dest, iname, p)
             shards = dict((base_idxs.get(iname) or spec)["shards"])
             for b in affected:
                 shards[str(b)] = final if b in written else None
@@ -641,20 +604,13 @@ def indexed_hnsw_topk(
     if idx is None:
         return _empty_serve(spark)
     blocked = None
-    dv_paths = VER._dv_paths(table, man)
-    if dv_paths:
-        import pyspark.sql.functions as _F
-
+    dv_keys = VER._read_dv_keys(spark, table, man)
+    if dv_keys is not None:
         from semantic_index_spark.session import collect_bounded
 
         key = man["key_cols"][0]
-        phys = VER._colmap(man).get(key, key)  # DV files store PHYSICAL names
         rows = collect_bounded(
-            spark.read.parquet(*dv_paths)
-            .select(_F.col(phys).alias(key))
-            .distinct(),
-            max_blocked,
-            "indexed_hnsw_topk DV tombstones",
+            dv_keys.distinct(), max_blocked, "indexed_hnsw_topk DV tombstones"
         )
         blocked = {int(r[key]) for r in rows}
     return hnsw_topk(idx, query, k=k, ef=ef, blocked=blocked)
@@ -674,10 +630,15 @@ def _read_index_shards(
 ):
     """Union ONE index's shard partitions ACROSS owning versions — one
     read per owning version with basePath (recovering the partition
-    columns), exactly the grouping ``read_bucketed`` does for buckets.
+    columns), exactly the grouping ``read_bucketed`` does for buckets,
+    under the kind's declared file schema (no footer-inference job).
     Returns None when no shard has an owner (empty table)."""
     iname, spec = _resolve_index(man, name, kind)
     idx_dir = _idx_dir(iname, spec["params"])
+    key = man["key_cols"][0]
+    schema = _IDX_SCHEMA[spec["params"].get("kind", "hnsw")].format(
+        key=VER._manifest_schema(man)[key].dataType.simpleString()
+    )
     by_version: dict = {}
     for b, v in spec["shards"].items():
         if v is not None:
@@ -686,7 +647,7 @@ def _read_index_shards(
     for v, bs in sorted(by_version.items()):
         base = os.path.join(table, f"v={v}", idx_dir)
         parts.append(
-            spark.read.option("basePath", base).parquet(
+            spark.read.schema(schema).option("basePath", base).parquet(
                 *[os.path.join(base, f"shard={b}") for b in sorted(bs)]
             )
         )

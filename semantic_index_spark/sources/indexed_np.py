@@ -1,8 +1,16 @@
-"""Spark-FREE co-committed index shard builders (round 13 — VERDICT r12
-task #4): the SQL front door's ``INSERT INTO`` commits in a Python
-worker with no SparkSession, so an indexed table's shard rebuilds must
-run on numpy/pyarrow alone. Every encoder here replicates its Spark
-expression BIT-FOR-BIT:
+"""Spark-FREE co-committed index shard builders. Every commit that
+rewrites buckets of an indexed table — ``merge_into_bucketed``,
+``optimize_bucketed`` and the SQL front door's ``INSERT INTO`` — builds
+the rewritten buckets' shards here, from the exact bucket files it has
+just staged: :func:`stage_bucket_shards` reads ONE bucket's staged files
+(physical column names, mapped back to logical ones) one record batch at
+a time and writes every index's shard for it into the same staged
+directory. ``indexed._stage_merge_index`` runs it as one Spark task per
+rewritten bucket; the SQL door's commit worker, which has no
+SparkSession, runs it in a loop. Only ``attach_*_index`` still builds
+shards with the Spark encoders (the full-table path, and the reference
+these builders are tested against). Every encoder here replicates its
+Spark expression BIT-FOR-BIT:
 
 - dots and squared distances are SEQUENTIAL per-dimension folds
   (``acc = (acc + x_d * y_d)``), matching ``functions.vector.dot``'s
@@ -20,9 +28,9 @@ expression BIT-FOR-BIT:
   path's ``applyInPandas`` task calls — one implementation, zero drift
   (the graph is a function of the id set, not insertion order).
 
-Equivalence is pytest-locked: a SQL INSERT's worker-built shards must
-serve identically to a Spark-side ``merge_into_bucketed`` rebuild of
-the same rows (``test_r13_sql_insert_indexed_tables``).
+Equivalence is pytest-locked: OPTIMIZE over every bucket of a freshly
+attached table reproduces each Spark-built shard row for row
+(``test_numpy_shard_builders_match_spark_attach``).
 """
 
 from __future__ import annotations
@@ -107,109 +115,159 @@ def pq_codes_np(mat, codebooks):
     return out
 
 
-def _emb_matrix(tbl, emb_col):
-    """(n, d) float64 matrix from an arrow list column — float32 source
-    columns widen exactly, matching Spark's ``cast("array<double>")``."""
+def _emb_matrix(col):
+    """(n, d) float64 matrix from an arrow list array — float32 values
+    widen exactly, matching Spark's ``cast("array<double>")``."""
     import numpy as np
+    import pyarrow.compute as pc
 
-    col = tbl.column(emb_col)
-    rows = col.to_pylist()
-    return np.asarray(rows, dtype=np.float64)
+    lens = pc.list_value_length(col)
+    bounds = pc.min_max(lens).as_py()
+    if col.null_count or bounds["min"] != bounds["max"]:
+        raise ValueError(
+            "co-committed index: every embedding must be a non-null "
+            "vector of one length"
+        )
+    flat = col.flatten().to_numpy(zero_copy_only=False)
+    return flat.astype(np.float64).reshape(len(col), bounds["max"])
 
 
-def write_index_shard_np(
-    staged: str,
-    idx_dir: str,
-    bucket: int,
-    params: dict,
-    tbl,
-    key: str,
-) -> None:
-    """Build ONE index's shard for ONE rewritten bucket from the merged
-    bucket content (arrow table, LOGICAL column names) and write it into
-    the staged commit directory with the exact partition layout and file
-    schema the Spark-side ``partitionBy`` writers produce — readers
-    cannot tell which engine built a shard."""
+def _list_array(mat, value_type):
+    """Row-per-list arrow array of a 2-d numpy matrix."""
     import numpy as np
     import pyarrow as pa
-    import pyarrow.parquet as pq
+
+    n, d = mat.shape
+    offsets = np.arange(n + 1, dtype=np.int32) * d
+    return pa.ListArray.from_arrays(
+        pa.array(offsets), pa.array(mat.reshape(-1), value_type)
+    )
+
+
+def _ivf_tables(ids, mat, params):
+    """(cell, arrow table) for each IVF cell one batch's rows fall in, in
+    the file schema the Spark-side ``partitionBy`` writer produces."""
+    import numpy as np
+    import pyarrow as pa
 
     kind = params.get("kind", "hnsw")
-    mat = _emb_matrix(tbl, params["emb_col"])
-    ids = tbl.column(key)
-    if kind == "hnsw":
-        from semantic_index_spark.operators.hnsw import _build_shard
-
-        id64 = ids.to_numpy(zero_copy_only=False).astype("int64")
-        adj, levels = _build_shard(
-            id64, mat, params["m"], params["ef_construction"], params["seed"]
-        )
-        order = sorted(adj)
-        vecs = {int(id64[i]): mat[i] for i in range(len(id64))}
-        out = pa.table(
-            {
-                "id": pa.array(order, pa.int64()),
-                "embedding": pa.array(
-                    [[float(x) for x in vecs[i]] for i in order],
-                    pa.list_(pa.float64()),
-                ),
-                "max_level": pa.array(
-                    [levels[i] for i in order], pa.int32()
-                ),
-                "neighbors": pa.array(
-                    [adj[i] for i in order], pa.list_(pa.list_(pa.int64()))
-                ),
-            }
-        )
-        d = os.path.join(staged, idx_dir, f"shard={int(bucket)}")
-        os.makedirs(d, exist_ok=True)
-        pq.write_table(out, os.path.join(d, "part-00000.parquet"))
-        return
+    if kind not in ("ivfsq", "ivfpq"):
+        raise ValueError(f"unknown co-committed index kind {kind!r}")
     cells = ivf_cells_np(mat, params["centroids"])
     if kind == "ivfsq":
         codes = sq_codes_np(mat, params["model"])
-        for c in np.unique(cells):
-            m = cells == c
-            out = pa.table(
-                {
-                    "vec_id": ids.filter(pa.array(m)).combine_chunks(),
-                    "codes": pa.array(
-                        [row.tolist() for row in codes[m]],
-                        pa.list_(pa.int8()),
-                    ),
-                }
-            )
-            d = os.path.join(
-                staged, idx_dir, f"shard={int(bucket)}", f"_cell={int(c)}"
-            )
-            os.makedirs(d, exist_ok=True)
-            pq.write_table(out, os.path.join(d, "part-00000.parquet"))
-        return
-    if kind == "ivfpq":
-        pqc = pq_codes_np(mat, params["codebooks"])
-        m_sub = pqc.shape[1]
-        for c in np.unique(cells):
-            m = cells == c
-            import pyarrow.compute as pc
+    else:
+        codes = pq_codes_np(mat, params["codebooks"])
+    for c in np.unique(cells):
+        m = cells == c
+        sel = ids.filter(pa.array(m))
+        if kind == "ivfsq":
+            out = {"vec_id": sel, "codes": _list_array(codes[m], pa.int8())}
+        else:  # long-form (vec_id, sub, code) rows, subspace-major
+            n, m_sub = len(sel), codes.shape[1]
+            out = {
+                "vec_id": sel.take(pa.array(np.tile(np.arange(n), m_sub))),
+                "sub": pa.array(np.repeat(np.arange(m_sub, dtype=np.int32), n)),
+                "code": pa.array(codes[m].T.reshape(-1)),
+            }
+        yield int(c), pa.table(out)
 
-            sel = ids.filter(pa.array(m)).combine_chunks()
-            n_sel = len(sel)
-            # long-form (vec_id, sub, code) rows
-            idx_take = np.tile(np.arange(n_sel), m_sub)
-            vec_long = pc.take(sel, pa.array(idx_take, pa.int64()))
-            sub_long = np.repeat(np.arange(m_sub, dtype=np.int32), n_sel)
-            code_long = pqc[m].T.reshape(-1).astype(np.int32)
-            out = pa.table(
-                {
-                    "vec_id": vec_long,
-                    "sub": pa.array(sub_long, pa.int32()),
-                    "code": pa.array(code_long, pa.int32()),
-                }
-            )
-            d = os.path.join(
-                staged, idx_dir, f"shard={int(bucket)}", f"_cell={int(c)}"
-            )
+
+def _hnsw_table(held, params):
+    """One HNSW shard as an arrow table, built from its (ids, matrix)
+    batches by the SAME ``_build_shard`` the Spark path's task calls."""
+    import numpy as np
+    import pyarrow as pa
+
+    from semantic_index_spark.operators.hnsw import _build_shard
+
+    id64 = np.concatenate(
+        [ids.to_numpy(zero_copy_only=False) for ids, _ in held]
+    ).astype("int64")
+    mat = np.concatenate([m for _, m in held])
+    adj, levels = _build_shard(
+        id64, mat, params["m"], params["ef_construction"], params["seed"]
+    )
+    order = sorted(adj)
+    pos = {int(i): k for k, i in enumerate(id64)}
+    return pa.table(
+        {
+            "id": pa.array(order, pa.int64()),
+            "embedding": _list_array(mat[[pos[i] for i in order]], pa.float64()),
+            "max_level": pa.array([levels[i] for i in order], pa.int32()),
+            "neighbors": pa.array(
+                [adj[i] for i in order], pa.list_(pa.list_(pa.int64()))
+            ),
+        }
+    )
+
+
+def _staged_batches(bdir: str, cols: list):
+    """The non-empty record batches of one staged bucket's data files."""
+    import pyarrow.parquet as pq
+
+    for f in sorted(os.listdir(bdir)):
+        if f.startswith((".", "_")):
+            continue  # checksum / marker files
+        with pq.ParquetFile(os.path.join(bdir, f)) as pf:
+            for batch in pf.iter_batches(columns=cols):
+                if batch.num_rows:
+                    yield batch
+
+
+def stage_bucket_shards(staged: str, man: dict, bucket: int) -> None:
+    """Build every co-committed index's shard for ONE rewritten bucket
+    from the data files the commit staged for it (``__bucket=<b>``,
+    PHYSICAL column names), and write them into the same staged
+    directory in the layout the Spark-side writers produce — readers
+    cannot tell which engine built a shard. The bucket is read one record
+    batch at a time: the IVF kinds encode each batch and append it to one
+    parquet file per cell, so memory holds one batch; HNSW holds its
+    shard until the graph builds (as ``build_hnsw``'s ``applyInPandas``
+    task does). File names are fixed (``part-00000.parquet``), so a
+    retried task overwrites its failed attempt's files. A bucket the
+    commit left empty stages no file and gets no shard."""
+    import pyarrow.parquet as pq
+
+    from semantic_index_spark.sources import versioned as VER
+    from semantic_index_spark.sources.indexed import _idx_dir
+
+    cm = VER._colmap(man)
+    key = man["key_cols"][0]
+    phys_key = cm.get(key, key)
+    specs = [  # (shard dir, params, physical embedding column)
+        (
+            os.path.join(staged, _idx_dir(n, s["params"]), f"shard={int(bucket)}"),
+            s["params"],
+            cm.get(s["params"]["emb_col"], s["params"]["emb_col"]),
+        )
+        for n, s in VER._indexes(man).items()
+    ]
+    held = {d: [] for d, p, _ in specs if p.get("kind", "hnsw") == "hnsw"}
+    writers: dict = {}  # cell file path → open ParquetWriter
+    cols = sorted({phys_key} | {emb for _, _, emb in specs})
+    bdir = os.path.join(staged, f"__bucket={int(bucket)}")
+    try:
+        for batch in _staged_batches(bdir, cols):
+            ids, mats = batch.column(phys_key), {}
+            for d, p, emb in specs:
+                if emb not in mats:
+                    mats[emb] = _emb_matrix(batch.column(emb))
+                if d in held:
+                    held[d].append((ids, mats[emb]))
+                    continue
+                for c, out in _ivf_tables(ids, mats[emb], p):
+                    path = os.path.join(d, f"_cell={c}", "part-00000.parquet")
+                    if path not in writers:
+                        os.makedirs(os.path.dirname(path), exist_ok=True)
+                        writers[path] = pq.ParquetWriter(path, out.schema)
+                    writers[path].write_table(out)
+    finally:
+        for w in writers.values():
+            w.close()
+    for d, p, _ in specs:
+        if held.get(d):
             os.makedirs(d, exist_ok=True)
-            pq.write_table(out, os.path.join(d, "part-00000.parquet"))
-        return
-    raise ValueError(f"unknown co-committed index kind {kind!r}")
+            pq.write_table(
+                _hnsw_table(held[d], p), os.path.join(d, "part-00000.parquet")
+            )

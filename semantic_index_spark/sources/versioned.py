@@ -1159,25 +1159,38 @@ def _dv_paths(table: str, man: dict, buckets: "set[int] | None" = None) -> list[
     return out
 
 
+def _read_dv_keys(
+    spark: SparkSession, table: str, man: dict, buckets: "set[int] | None" = None
+) -> "DataFrame | None":
+    """The deletion-vector keys a manifest references (LOGICAL key
+    names), or None when it references none. DV files store PHYSICAL key
+    names (stable across renames) under the manifest's key types, so the
+    read supplies that schema instead of paying a footer-inference job."""
+    import pyspark.sql.functions as F
+    from pyspark.sql.types import StructField, StructType
+
+    paths = _dv_paths(table, man, buckets)
+    if not paths:
+        return None
+    cm, types = _colmap(man), _manifest_schema(man)
+    phys = StructType(
+        [StructField(cm.get(k, k), types[k].dataType) for k in man["key_cols"]]
+    )
+    return spark.read.schema(phys).parquet(*paths).select(
+        *[F.col(cm.get(k, k)).alias(k) for k in man["key_cols"]]
+    )
+
+
 def _apply_dv(
     spark: SparkSession, df: DataFrame, table: str, man: dict, buckets: "set[int] | None" = None
 ) -> DataFrame:
     """Anti-join out rows whose key appears in the manifest's deletion
     vectors. Keys hash to exactly one bucket, so applying the DV keys
     globally equals applying them per bucket."""
-    import pyspark.sql.functions as F
-
-    paths = _dv_paths(table, man, buckets)
-    if not paths:
+    dv_keys = _read_dv_keys(spark, table, man, buckets)
+    if dv_keys is None:
         return df
-    cm = _colmap(man)
-    # DV files store PHYSICAL key names (stable across renames)
-    dv_keys = (
-        spark.read.parquet(*paths)
-        .select(*[F.col(cm.get(k, k)).alias(k) for k in man["key_cols"]])
-        .distinct()
-    )
-    return df.join(dv_keys, man["key_cols"], "left_anti")
+    return df.join(dv_keys.distinct(), man["key_cols"], "left_anti")
 
 
 def read_bucketed(
@@ -1394,15 +1407,12 @@ def merge_into_bucketed(
     if _indexes(man):
         # co-committed indexes (sources/indexed.py): every index's affected
         # shards' replacements ride THIS commit's staged directory and
-        # manifest — table and indexes can never publish separately.
-        # Materialize `result` FIRST: it feeds two consumers (the staged
-        # data write and the shard build), and a lazy plan evaluated
-        # twice could publish index shards disagreeing with the bucket
-        # data if any input were non-deterministic (round 12)
+        # manifest — table and indexes can never publish separately. The
+        # shards build from the staged bucket files, so they describe the
+        # exact bytes the commit publishes
         from semantic_index_spark.sources.indexed import _stage_merge_index
 
-        result = result.localCheckpoint(eager=True)
-        stage_extra, finalize = _stage_merge_index(spark, man, result, affected)
+        stage_extra, finalize = _stage_merge_index(man, affected, spark)
     # a rewritten bucket has its DVs folded into the data — clear them;
     # the commit is conditional on `man` and rebases over concurrent
     # commits that touched only DISJOINT buckets (_publish_bucketed)
@@ -2172,17 +2182,14 @@ def optimize_bucketed(
     if _indexes(man):
         # co-committed indexes: OPTIMIZE is the compaction half of the DV
         # trade for the index too — the rewritten buckets' shard graphs
-        # rebuild from the DV-FOLDED content in the SAME commit, so when
-        # this manifest clears the DV lists the serve (which would stop
-        # applying those keys as tombstones) finds the deleted nodes
+        # rebuild from the DV-FOLDED staged files in the SAME commit, so
+        # when this manifest clears the DV lists the serve (which would
+        # stop applying those keys as tombstones) finds the deleted nodes
         # physically gone from the graph, never resurrected
         from semantic_index_spark.sources.indexed import _stage_merge_index
 
-        # one evaluation feeds both the data write and the shard build
-        # (checkpoint preserves the zorder sortWithinPartitions layout)
-        rows = rows.localCheckpoint(eager=True)
         stage_extra, finalize = _stage_merge_index(
-            spark, man, rows, list(affected) + list(dv_only)
+            man, list(affected) + list(dv_only), spark
         )
     return _commit_bucketed(
         table, rows, base, man, dv_clear=set(affected) | set(dv_only),

@@ -683,17 +683,19 @@ def _project_logical(tbl, colmap: dict, fields):
 # hashable lanes), and schema evolution (INSERT sources must match the
 # view schema) all point the user at the Python API verb that handles
 # them. Co-committed indexes are MAINTAINED, not refused (round 13):
-# the commit worker rebuilds each index's affected shards Spark-free
-# through ``indexed_np``'s bit-exact numpy/pure-Python builders —
-# pytest-locked shard-file-identical to a Spark-side merge's rebuild.
+# the commit worker runs the same shard-staging hook as
+# ``merge_into_bucketed`` and OPTIMIZE (``indexed._stage_merge_index``),
+# which builds each index's affected shards from the staged bucket files
+# with ``indexed_np``'s Spark-free builders — the merge runs them as one
+# Spark task per bucket, this worker in a loop.
 #
-# Driver-side cost note: commit() merges affected buckets (and now
-# rebuilds their shards) single-threaded in one Python worker — the
-# right trade for the SQL door's intended shape (modest upsert batches
-# touching few buckets). A wide upsert touching most buckets of a large
-# table serializes that work through one process: use
-# ``merge_into_bucketed`` for those (the Spark verb parallelizes both
-# the merge and the shard rebuilds).
+# Driver-side cost note: commit() merges affected buckets and rebuilds
+# their shards single-threaded in one Python worker — the right trade
+# for the SQL door's intended shape (modest upsert batches touching few
+# buckets). A wide upsert touching most buckets of a large table
+# serializes that work through one process: use ``merge_into_bucketed``
+# for those (it runs both the merge and the shard builds as parallel
+# Spark tasks, one shard-build task per rewritten bucket).
 #
 # Scale shape: each executor task buckets its own rows with the
 # vectorized ``buckets_np`` (O(n) numpy, bit-exact with the writer-side
@@ -783,7 +785,6 @@ class BucketedMergeWriter(DataSourceArrowWriter):
         colmap = man.get("colmap") or {}
         phys_key = colmap.get(self.key, self.key)
         affected = sorted(by_bucket)
-        logical_by_bucket: dict[int, "pa.Table"] = {}
         for b in affected:
             inc = pa.concat_tables(
                 _project_logical(pq.read_table(p), {}, fields) for p in by_bucket[b]
@@ -826,60 +827,21 @@ class BucketedMergeWriter(DataSourceArrowWriter):
                 )
                 parts.append(kept)
             parts.append(inc)
-            logical = pa.concat_tables(parts)
-            logical_by_bucket[b] = logical
-            merged = logical.rename_columns(
+            merged = pa.concat_tables(parts).rename_columns(
                 [colmap.get(f.name, f.name) for f in fields]
             )
             outd = os.path.join(self.staged, f"__bucket={b}")
             os.makedirs(outd, exist_ok=True)
             pq.write_table(merged, os.path.join(outd, "part-00000.parquet"))
         shutil.rmtree(os.path.join(self.staged, "__incoming"), ignore_errors=True)
-        # co-committed indexes (round 13): rebuild every index's affected
-        # shards from the SAME merged bucket content, Spark-free — the
-        # numpy encoders are bit-exact twins of the Spark expressions and
-        # the HNSW builder is the identical pure-Python function the
-        # applyInPandas task runs. Shards land in the one staged commit;
-        # the finalize advances each index's shard map exactly like the
-        # merge path's _stage_merge_index finalize (disjoint-bucket
-        # rebases keep both writers' shards).
-        idxs = VER._indexes(man)
-        finalize = None
-        if idxs:
-            from semantic_index_spark.sources.indexed import _idx_dir
-            from semantic_index_spark.sources.indexed_np import (
-                write_index_shard_np,
-            )
+        # co-committed indexes: the SAME staging hook merge and OPTIMIZE
+        # use, run in this process — every index's affected shards build
+        # from the bucket files just staged and land in the one commit
+        stage = finalize = None
+        if VER._indexes(man):
+            from semantic_index_spark.sources.indexed import _stage_merge_index
 
-            for iname, spec in idxs.items():
-                p = spec["params"]
-                for b in affected:
-                    write_index_shard_np(
-                        self.staged, _idx_dir(iname, p), b, p,
-                        logical_by_bucket[b], self.key,
-                    )
-
-            def finalize(manifest, final, base_man, dest):
-                base_idxs = VER._indexes(base_man) or idxs
-                indexes = {}
-                for iname, spec in idxs.items():
-                    p = spec["params"]
-                    hdir = os.path.join(dest, _idx_dir(iname, p))
-                    written = {
-                        int(d.split("=", 1)[1])
-                        for d in (
-                            os.listdir(hdir) if os.path.isdir(hdir) else []
-                        )
-                        if d.startswith("shard=")
-                    }
-                    shards = dict((base_idxs.get(iname) or spec)["shards"])
-                    for b in affected:
-                        shards[str(b)] = final if b in written else None
-                    indexes[iname] = {"params": dict(p), "shards": shards}
-                manifest.pop("index", None)  # legacy key re-keys
-                manifest["indexes"] = indexes
-                return manifest
-
+            stage, finalize = _stage_merge_index(man, affected)
         base = {
             "key_cols": man["key_cols"],
             "n_buckets": self.n_buckets,
@@ -889,7 +851,7 @@ class BucketedMergeWriter(DataSourceArrowWriter):
         }
         VER._commit_staged_bucketed(
             self.table, self.staged, base, man, dv_clear=affected,
-            finalize_manifest=finalize,
+            stage_extra=stage, finalize_manifest=finalize,
         )
 
     def abort(self, messages):

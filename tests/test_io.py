@@ -2866,6 +2866,7 @@ def _emb(i):
     return [float((i * 37) % 11), float((i * 53) % 13), float((i * 29) % 7)]
 
 
+@pytest.mark.indexed
 def test_indexed_table_attach_merge_serve_time_travel(spark, tmp_path):
     """VERDICT r10 #7 (index ∘ table atomicity): the HNSW index is a
     TABLE ARTIFACT — attach commits it into the manifest, every merge
@@ -2970,6 +2971,7 @@ def test_indexed_table_attach_merge_serve_time_travel(spark, tmp_path):
     assert got4 == got_renamed
 
 
+@pytest.mark.indexed
 def test_indexed_table_crash_never_skews(spark, tmp_path, monkeypatch):
     """VERDICT r10 #7 done-criterion: a crash between 'index written' and
     'table committed' can never exist — both ride ONE staged directory
@@ -3127,6 +3129,7 @@ def test_versioned_table_sql_front_door(spark, tmp_path):
     assert spark.sql("SELECT sum(d) AS s FROM sqlfd_plain").collect()[0][0] == 90
 
 
+@pytest.mark.indexed
 def test_indexed_table_concurrent_merges_rebase_shards(spark, tmp_path):
     """Round 11: the co-committed index's shard map merges across the
     DISJOINT-bucket rebase exactly like bucket ownership — two concurrent
@@ -3177,6 +3180,7 @@ def test_indexed_table_concurrent_merges_rebase_shards(spark, tmp_path):
     assert got == _brute_topk(spark, final, q, 8)
 
 
+@pytest.mark.indexed
 def test_detach_hnsw_index_and_race_guard(spark, tmp_path, monkeypatch):
     """Round 11: detach_hnsw_index is a metadata-only commit removing the
     index spec (shard files stay for time travel, merges stop
@@ -3574,6 +3578,7 @@ def test_r12_sql_insert_widened_table(spark, tmp_path):
     assert len(cur) == 31
 
 
+@pytest.mark.indexed
 def test_r12_indexed_table_ivfsq_lifecycle_and_crash(spark, tmp_path, monkeypatch):
     """VERDICT r11 #4: the co-committed index generalizes to a SECOND
     kind — IVF-SQ8 (frozen centroids + quantizer IN the manifest params,
@@ -3768,6 +3773,7 @@ def test_r12_widening_decimal_date_lanes(spark, tmp_path):
     }
 
 
+@pytest.mark.indexed
 def test_r12_multi_index_table(spark, tmp_path):
     """VERDICT r11 #4 (second half): a table carries SEVERAL named
     co-committed indexes — an HNSW and an IVF-SQ8 over the same data —
@@ -3864,6 +3870,7 @@ def test_r12_multi_index_table(spark, tmp_path):
     assert got_c == want2 and got_c2 == want2
 
 
+@pytest.mark.indexed
 def test_r12_sql_insert_maintains_index(spark, tmp_path):
     """History: round 12 REFUSED SQL INSERT on indexed tables (the
     commit worker has no SparkSession to rebuild shards); round 13
@@ -3989,6 +3996,7 @@ def test_r13_string_key_sql_lane(spark, tmp_path):
     assert VER.read_bucketed(spark, t, version=0).count() == 60
 
 
+@pytest.mark.indexed
 def test_r13_string_key_ivfsq_index(spark, tmp_path):
     """Round 13: the co-committed IVF-SQ8 index attaches to a STRING-keyed
     table (codes carry vec_id as an opaque payload), merges maintain its
@@ -4041,6 +4049,7 @@ def test_r13_string_key_ivfsq_index(spark, tmp_path):
     assert "doc-00007" not in {v for v, _ in got}
 
 
+@pytest.mark.indexed
 def test_r13_indexed_table_ivfpq_lifecycle(spark, tmp_path, monkeypatch):
     """Round 13 (VERDICT r12 task #3): IVF-PQ as the THIRD co-committed
     index kind — frozen per-subspace codebooks + centroids IN the
@@ -4136,6 +4145,7 @@ def test_r13_indexed_table_ivfpq_lifecycle(spark, tmp_path, monkeypatch):
     assert got == brute and all(isinstance(v, str) for v, _ in got)
 
 
+@pytest.mark.indexed
 def test_r13_sql_insert_indexed_tables(spark, tmp_path, monkeypatch):
     """Round 13 (VERDICT r12 task #4): ``INSERT INTO`` works on tables
     with co-committed indexes — the commit worker rebuilds every index's
@@ -4143,8 +4153,10 @@ def test_r13_sql_insert_indexed_tables(spark, tmp_path, monkeypatch):
     the Spark encoders + the shared pure-Python HNSW builder). Locked
     here: (1) all three kinds' exhaustive serves equal brute force after
     a pure-SQL upsert; (2) the worker-built shard FILES are row-identical
-    to a Spark-side merge's rebuild of the same upsert (twin-table
-    comparison — the bit-exactness claim, not just serve agreement);
+    to ``merge_into_bucketed``'s for the same upsert (twin-table
+    comparison — both run the same staging hook, so this locks the two
+    doors' bucket merges; numpy-vs-Spark encoder parity is
+    ``test_numpy_shard_builders_match_spark_attach``);
     (3) the crash window: a commit that dies before publish leaves
     table + indexes at the old version together."""
     import os
@@ -4247,6 +4259,131 @@ def test_r13_sql_insert_indexed_tables(spark, tmp_path, monkeypatch):
         (r["vec_id"], r["score"])
         for r in IDX.indexed_hnsw_topk(spark, t, q, k=6, ef=None).collect()
     ] == brute
+
+
+@pytest.mark.indexed
+def test_numpy_shard_builders_match_spark_attach(spark, tmp_path):
+    """Every merge, OPTIMIZE and SQL INSERT builds index shards with the
+    Spark-free builders of ``indexed_np``; ``attach_*_index`` builds them
+    with the Spark encoders. OPTIMIZE over every bucket of a freshly
+    attached table (no DVs, so the content is unchanged) must therefore
+    reproduce every Spark-built shard row for row, for all three kinds.
+    The ivfsq index has 20 cells (the arrow cell-assignment path, k >
+    16) and the ivfpq index 4 (the expression path)."""
+    import numpy as np
+
+    from semantic_index_spark.sources import indexed as IDX
+    from semantic_index_spark.sources import versioned as VER
+
+    rng = np.random.default_rng(13)
+    rows = [(i, [float(x) for x in rng.normal(size=6)]) for i in range(150)]
+    t = str(tmp_path / "np_vs_spark")
+    VER.create_bucketed(
+        spark.createDataFrame(rows, "id long, embedding array<double>"),
+        t, ["id"], n_buckets=4,
+    )
+    IDX.attach_hnsw_index(spark, t, m=4, ef_construction=16)
+    IDX.attach_ivfsq_index(spark, t, n_cells=20)
+    IDX.attach_ivfpq_index(spark, t, m_sub=3, pq_k=8, n_cells=4)
+    man_spark = VER._read_manifest(t)
+    v = VER.optimize_bucketed(spark, t, buckets=list(range(4)))
+    man_np = VER._read_manifest(t)
+    assert v == man_spark["version"] + 1
+    for spec in VER._indexes(man_np).values():
+        assert set(spec["shards"].values()) == {v}  # every shard rebuilt
+    for kind, cols in (
+        ("hnsw", ["shard", "id", "embedding", "max_level", "neighbors"]),
+        ("ivfsq", ["shard", "_cell", "vec_id", "codes"]),
+        ("ivfpq", ["shard", "_cell", "vec_id", "sub", "code"]),
+    ):
+        a = IDX._read_index_shards(spark, t, man_spark, kind=kind)
+        b = IDX._read_index_shards(spark, t, man_np, kind=kind)
+        assert a.dtypes == b.dtypes, kind
+        ra = sorted(tuple(r) for r in a.select(*cols).collect())
+        rb = sorted(tuple(r) for r in b.select(*cols).collect())
+        assert ra and ra == rb, f"{kind}: numpy shards differ from Spark's"
+
+
+@pytest.mark.indexed
+def test_indexed_merge_job_group_and_failed_shard_task(
+    spark, tmp_path, monkeypatch
+):
+    """A merge on an indexed table runs EVERY Spark job it needs inside
+    the caller's job group (so callers can cancel and account for it),
+    shard builds included. A shard-build task that raises fails the
+    merge before it publishes: the table and its indexes both stay at
+    the old version."""
+    from semantic_index_spark.sources import indexed as IDX
+    from semantic_index_spark.sources import indexed_np as INP
+    from semantic_index_spark.sources import versioned as VER
+
+    t = str(tmp_path / "grp")
+    rows = [(i, _emb(i)) for i in range(80)]
+    VER.create_bucketed(
+        spark.createDataFrame(rows, "id long, embedding array<double>"),
+        t, ["id"], n_buckets=4,
+    )
+    IDX.attach_hnsw_index(spark, t, m=4, ef_construction=16)
+    IDX.attach_ivfsq_index(spark, t, n_cells=4)
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def jobs() -> dict:
+        jsc.listenerBus().waitUntilEmpty()  # job events arrive async
+        seq = jsc.statusStore().jobsList(None)
+        out = {}
+        for i in range(seq.size()):
+            j = seq.apply(i)
+            g = j.jobGroup()
+            out[int(j.jobId())] = g.get() if g.isDefined() else None
+        return out
+
+    src = spark.createDataFrame(
+        [(3, _emb(903)), (500, _emb(500))], "id long, embedding array<double>"
+    )
+    last = max(jobs(), default=-1)
+    sc.setJobGroup("indexed-merge", "merge under a caller job group")
+    try:
+        VER.merge_into_bucketed(spark, t, src)
+    finally:
+        sc._jsc.clearJobGroup()
+    ran = {j: g for j, g in jobs().items() if j > last}
+    assert ran and set(ran.values()) == {"indexed-merge"}, ran
+    # failure path: every shard-build task raises
+    q = _emb(9)
+
+    def serves():
+        return (
+            [(r["vec_id"], r["score"]) for r in IDX.indexed_hnsw_topk(
+                spark, t, q, k=5, ef=None).collect()],
+            [(r["vec_id"], r["score"]) for r in IDX.indexed_ivfsq_topk(
+                spark, t, q, k=5, nprobe=4, candidates=500).collect()],
+        )
+
+    v_before, man_before, serve_before = (
+        VER.current_version(t), VER._read_manifest(t), serves()
+    )
+
+    def failing_build(staged, man, bucket):
+        raise RuntimeError("injected shard-build failure")
+
+    with monkeypatch.context() as m:
+        m.setattr(INP, "stage_bucket_shards", failing_build)
+        with pytest.raises(Exception, match="injected shard-build failure"):
+            VER.merge_into_bucketed(
+                spark, t,
+                spark.createDataFrame(
+                    [(7, _emb(907)), (600, _emb(600))],
+                    "id long, embedding array<double>",
+                ),
+            )
+    assert VER.current_version(t) == v_before
+    assert VER._read_manifest(t) == man_before
+    live = VER.read_bucketed(spark, t)
+    assert 600 not in {r["id"] for r in live.select("id").collect()}
+    assert serves() == serve_before
+    want = _brute_topk(spark, live, q, 5)
+    assert serve_before == (want, want)
 
 
 def test_r13_sql_view_broadcast_hint(spark, tmp_path):

@@ -1073,6 +1073,7 @@ def test_versioned_feed_cap_anchored_to_committed_batches(spark, tmp_path):
     assert r.latestOffset() == {"version": 4}
 
 
+@pytest.mark.indexed
 def test_merge_stream_sink_maintains_cocommitted_index(spark, tmp_path):
     """Round 13 (VERDICT r12 #9): a streamed MERGE into an INDEXED table
     maintains the co-committed index at EVERY epoch — each micro-batch's
